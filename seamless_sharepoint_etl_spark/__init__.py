@@ -14,6 +14,9 @@ Design rules (see SURVEY.md §7):
   * Python UDFs only where built-ins genuinely cannot express the
     semantics, and then always Arrow-batched (pandas_udf /
     applyInPandas / mapInPandas), never row-at-a-time.
+  * Never the RDD API (foreachPartition, .rdd.map, parallelize, ...):
+    it opens a second Python worker pool, one worker per task slot,
+    beside the SQL/Arrow pool the Python kernels already hold.
 """
 
 __version__ = "0.1.0"

@@ -935,18 +935,16 @@ def clear_cc_label_cache() -> None:
     _CC_LABEL_CACHE.clear()
 
 
-# Introspection: rounds the LAST _min_label_cc invocation took to
-# converge (set on every call; read by tests and the optimization log
-# to evidence the pointer-doubling round count).
-_CC_LAST_ROUNDS = 0
-
-
-def _min_label_cc(edges: DataFrame, max_rounds: int, what: str) -> DataFrame:
+def _min_label_cc(
+    edges: DataFrame, max_rounds: int, what: str
+) -> tuple[DataFrame, int]:
     """Exact min-label connected components over an undirected edge
-    relation (first column, second column) — returns ``(k, label)``
-    with ``label`` = the component's minimum member id, one row per
-    vertex that appears in ``edges`` (isolated vertices are absent;
-    callers coalesce to the vertex's own id).
+    relation (first column, second column) — returns ``(labels,
+    rounds)``: ``labels`` is ``(k, label)`` with ``label`` = the
+    component's minimum member id, one row per vertex that appears in
+    ``edges`` (isolated vertices are absent; callers coalesce to the
+    vertex's own id), and ``rounds`` is how many relax+doubling rounds
+    it took to converge (evidence of the pointer-doubling round count).
 
     Scale: per round one vertex-keyed hash join + min-aggregate
     (relax) plus one label-keyed self-join (pointer doubling),
@@ -974,10 +972,8 @@ def _min_label_cc(edges: DataFrame, max_rounds: int, what: str) -> DataFrame:
     # aggregate per round instead of a join + count job. The agg also
     # materializes the round's LAZY checkpoint in the same job
     # (sum(label) touches every partition).
-    global _CC_LAST_ROUNDS
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for rnd in range(max_rounds):
-        _CC_LAST_ROUNDS = rnd + 1
         msgs = sym.join(labels, sym.ka == labels.k).select(
             F.col("kb").alias("k"), "label"
         )
@@ -1014,7 +1010,7 @@ def _min_label_cc(edges: DataFrame, max_rounds: int, what: str) -> DataFrame:
         prev_sum = new_sum
     else:
         raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
-    return labels
+    return labels, rnd + 1
 
 
 def neardup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1029,7 +1025,7 @@ def neardup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import ngram_jaccard_pairs
 
     e = ngram_jaccard_pairs(spark, sf_dir).select("doc_lo", "doc_hi")
-    labels = _min_label_cc(e, CC_MAX_ROUNDS, "neardup min-label CC")
+    labels, _ = _min_label_cc(e, CC_MAX_ROUNDS, "neardup min-label CC")
     _CC_LABEL_CACHE[key] = labels
     return labels
 

@@ -17,7 +17,9 @@ left to AQE's advisory size) on a real cluster.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 # Dynamic (session-level) confs — safe to apply to an existing session.
@@ -39,14 +41,24 @@ DYNAMIC_CONF: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's dynamic confs to an existing session (idempotent)."""
+    """Apply the engine's dynamic confs to an existing session (idempotent).
+
+    A conf the session refuses (static on some builds, or a value it
+    rejects) is named in one ``RuntimeWarning``; the engine then runs on
+    the session's own value (io.py re-checks the one truly required flag).
+    """
+    refused = []
     for k, v in DYNAMIC_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # A conf may be static on some builds; the engine degrades
-            # gracefully (io.py re-checks the one truly required flag).
-            pass
+        except PySparkException as e:
+            refused.append(f"{k}={v} ({e.getCondition() or type(e).__name__})")
+    if refused:
+        warnings.warn(
+            "session.configure: confs not applied: " + "; ".join(refused),
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return spark
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io
+from .formats import stage_partitions
 
 MAGIC = b"Obj\x01"
 _BLOCK_RECORDS = 200
@@ -207,18 +208,15 @@ def avro_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("acctbal_cents"),
         )
 
-        def write_part(rows) -> None:
-            rows = sorted(
-                (r["suppkey"], r["name"], r["nationkey"], r["acctbal_cents"])
-                for r in rows
-            )
+        def write_part(rows: list[tuple]) -> None:
             if not rows:
                 return
+            rows = sorted(rows)
             fname = f"part-{rows[0][0]:06d}.avro"
             write_ocf(os.path.join(path, fname), rows, _sync_for(fname))
 
         # deterministic file layout: partition by key range, not hash
-        sup.repartitionByRange(8, "suppkey").foreachPartition(write_part)
+        stage_partitions(sup.repartitionByRange(8, "suppkey"), write_part)
         with open(marker, "w") as fh:
             fh.write("ok")
 

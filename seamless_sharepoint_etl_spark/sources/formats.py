@@ -18,11 +18,34 @@ these queries do in reverse).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io, portable
+
+
+def stage_partitions(df: DataFrame, write_part: Callable[[list[tuple]], None]) -> int:
+    """Call ``write_part`` on executors once per partition of ``df``,
+    with that partition's rows as tuples, and return the row count.
+
+    The rows reach Python Arrow-batched through ``mapInArrow`` — the
+    SQL Python worker pool every other Python kernel uses — and each
+    partition yields one count row, so the single ``collect`` that
+    triggers the writes moves P integers, no data, to the driver.
+    """
+
+    def run(batches):
+        import pyarrow as pa
+
+        rows: list[tuple] = []
+        for b in batches:
+            rows.extend(zip(*(col.to_pylist() for col in b.columns)))
+        write_part(rows)
+        yield pa.RecordBatch.from_pydict({"n": [len(rows)]})
+
+    return sum(r["n"] for r in df.mapInArrow(run, "n long").collect())
 
 
 def _stage_dir(sf_dir: str, what: str) -> str:
@@ -164,7 +187,9 @@ def binaryfile_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     land as files (images/audio/video), `binaryFile` lists them as a
     distributed scan (one task per file group), and the first pass
     computes metadata without decoding. The materialization writes
-    files from executors via foreachPartition — no driver collect.
+    files from executors in an Arrow-batched ``mapInArrow`` that yields
+    one count per partition (one tiny collect triggers it), so staging
+    shares the SQL Python worker pool — no driver collect of data.
     The oracle recomputes length/digest from the source table, proving
     the bytes survived the file round-trip exactly.
     """
@@ -178,14 +203,14 @@ def binaryfile_scan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text")
         )
 
-        def write_files(rows) -> None:
-            for r in rows:
-                tmp = os.path.join(path, f".doc-{r['doc_id']:06d}.tmp")
+        def write_files(rows: list[tuple]) -> None:
+            for doc_id, text in rows:
+                tmp = os.path.join(path, f".doc-{doc_id:06d}.tmp")
                 with open(tmp, "wb") as fh:
-                    fh.write((r["text"] or "").encode("utf-8"))
-                os.replace(tmp, os.path.join(path, f"doc-{r['doc_id']:06d}.bin"))
+                    fh.write((text or "").encode("utf-8"))
+                os.replace(tmp, os.path.join(path, f"doc-{doc_id:06d}.bin"))
 
-        docs.repartition(8).foreachPartition(write_files)
+        stage_partitions(docs.repartition(8), write_files)
         with open(marker, "w") as fh:
             fh.write("ok")
 

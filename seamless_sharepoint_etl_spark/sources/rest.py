@@ -37,6 +37,7 @@ import hmac
 import json
 import math
 import os
+import shutil
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -128,11 +129,15 @@ def materialize_pages(
     partition (a tiny P-row collect), cumulative offsets, then a
     row_number window PARTITIONED by the range id (parallel, one task
     per range — round 1 used an unpartitioned global window, which
-    collapsed page assignment to a single task). Rows are then
-    hash-repartitioned by page id and each task writes the pages it
-    owns — no driver-side collect of data rows. Idempotent per
-    (sf_dir, page_size): skipped when the manifest of an earlier
-    materialization matches.
+    collapsed page assignment to a single task). The JVM then builds
+    one row per page — its items sorted by po_number, rendered by
+    ``to_json`` (null fields are omitted; the reader's ``row.get``
+    reads them as None) — and writes it with
+    ``write.partitionBy("__page").text`` under ``_staging``. No Python
+    worker runs and no data row reaches the driver: the driver only
+    renames each page's single part file to ``page-NNNNN.json``.
+    Idempotent per (sf_dir, page_size): skipped when the manifest of an
+    earlier materialization matches.
     """
     marker = os.path.join(endpoint, "_done.json")
     # version bump forces re-materialization of endpoints written before
@@ -143,16 +148,21 @@ def materialize_pages(
             if json.load(fh) == marker_body:
                 return endpoint
     os.makedirs(endpoint, exist_ok=True)
-    # re-materializing (changed page size / interrupted run): remove
-    # stale pages first — leftovers with higher page numbers would be
-    # listed by the reader and double-count rows
+    # re-materializing (changed page size / interrupted run): drop the
+    # marker first, so a failure below cannot leave it vouching for
+    # pages that are gone; then remove stale pages and staging output —
+    # leftover pages with higher page numbers would be listed by the
+    # reader and double-count rows
+    staging = os.path.join(endpoint, "_staging")
     for stale in os.listdir(endpoint):
-        if stale.startswith(("page-", ".page-")):
+        if stale == "_done.json" or stale.startswith(("page-", ".page-")):
             os.remove(os.path.join(endpoint, stale))
+    shutil.rmtree(staging, ignore_errors=True)
 
     items = io.seamless_items(spark, sf_dir)
     from pyspark.sql import Window
 
+    catalog = list(ITEMS_CATALOG)
     n_ranges = 16
     ranged = (
         items.repartitionByRange(n_ranges, "po_number")
@@ -161,53 +171,81 @@ def materialize_pages(
         # see the identical range partitioning
         .persist()
     )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, cnt in counts:  # range partition ids follow po_number order
-        offsets[pid] = acc
-        acc += cnt
-    off_col = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
-        ),
-        F.col("__pid"),
-    )
-    w = Window.partitionBy("__pid").orderBy("po_number")
-    paged = ranged.withColumn(
-        "__page",
-        ((off_col + F.row_number().over(w) - F.lit(1)) / F.lit(page_size)).cast(
-            "long"
-        ),
-    )
-    catalog = list(ITEMS_CATALOG)
-    name_to_id = {c["printable_name"]: c["column_id"] for c in catalog}
-    cols = [c["printable_name"] for c in catalog]
-
-    def write_pages(rows: Iterator) -> Iterator:
-        by_page: dict[int, list] = {}
-        for r in rows:
-            by_page.setdefault(r["__page"], []).append(
-                {"application_data": {name_to_id[c]: r[c] for c in cols}}
+    try:
+        counts = sorted(
+            (r["__pid"], r["cnt"])
+            for r in ranged.groupBy("__pid")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        )
+        offsets, acc = {}, 0
+        for pid, cnt in counts:  # range partition ids follow po_number order
+            offsets[pid] = acc
+            acc += cnt
+        off_col = F.element_at(
+            F.create_map(
+                *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
+            ),
+            F.col("__pid"),
+        )
+        w = Window.partitionBy("__pid").orderBy("po_number")
+        paged = ranged.withColumn(
+            "__page",
+            ((off_col + F.row_number().over(w) - F.lit(1)) / F.lit(page_size)).cast(
+                "long"
+            ),
+        )
+        # application_data is keyed by the physical column_id
+        app_data = F.struct(
+            *[F.col(c["printable_name"]).alias(c["column_id"]) for c in catalog]
+        )
+        pages = paged.groupBy("__page").agg(
+            # po_number leads the struct, so array_sort orders by it
+            F.array_sort(
+                F.collect_list(F.struct("po_number", app_data.alias("data")))
+            ).alias("items")
+        )
+        (
+            pages.select(
+                "__page",
+                F.to_json(
+                    F.struct(
+                        F.transform(
+                            "items",
+                            lambda it: F.struct(it["data"].alias("application_data")),
+                        ).alias("items")
+                    )
+                ).alias("value"),
             )
-        for page, payload in by_page.items():
-            tmp = os.path.join(endpoint, f".page-{page:05d}.json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump({"items": payload}, fh, sort_keys=True)
-            os.replace(tmp, os.path.join(endpoint, f"page-{page:05d}.json"))
-        return iter(())
-
-    paged.repartition(8, "__page").foreachPartition(lambda it: list(write_pages(it)))
-    ranged.unpersist()
+            .write.mode("overwrite")
+            .partitionBy("__page")
+            .text(staging)
+        )
+    finally:
+        ranged.unpersist()
+    n_rows = acc
+    n_pages = (n_rows + page_size - 1) // page_size
+    # one row per page → exactly one part file per __page=N directory
+    staged = {}
+    for d in os.listdir(staging):
+        if d.startswith("__page="):
+            (part,) = [
+                f for f in os.listdir(os.path.join(staging, d)) if f.startswith("part-")
+            ]
+            staged[int(d.split("=", 1)[1])] = os.path.join(staging, d, part)
+    if sorted(staged) != list(range(n_pages)):
+        raise RuntimeError(
+            f"staged pages {sorted(staged)} != expected 0..{n_pages - 1}"
+        )
+    for page, part in staged.items():
+        os.replace(part, os.path.join(endpoint, f"page-{page:05d}.json"))
+    shutil.rmtree(staging)
     with open(os.path.join(endpoint, "catalog.json"), "w") as fh:
         json.dump({"columns": catalog}, fh)
     # pagination index — the server-side metadata that makes ORDER
     # BY/LIMIT pushdown exact: per-page row counts in po_number order
-    n_rows = acc
     pages_meta = []
-    for page in range((n_rows + page_size - 1) // page_size):
+    for page in range(n_pages):
         pages_meta.append(
             {
                 "file": f"page-{page:05d}.json",

@@ -40,9 +40,7 @@ def test_routing_split_covers_everything(spark):
 
     routed = pipelines.routed(spark, SF_DIR)
     total = io.seamless_items(spark, SF_DIR).count()
-    by_route = dict(
-        routed.groupBy("route").count().rdd.map(lambda r: (r[0], r[1])).collect()
-    )
+    by_route = dict(routed.groupBy("route").count().collect())
     assert sum(by_route.values()) == total
     assert set(by_route) <= {"over_1500", "under_1500"}
 

@@ -139,16 +139,46 @@ def test_signature_verified_by_transport(spark, tmp_path):
     assert raised
 
 
-def test_materialize_pages_cleans_stale_pages(spark, tmp_path):
-    """Re-materializing after a page-size change must not leave stale
-    pages behind (they would be double-read by the scan)."""
-    import json as _json
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
+
+def test_materialize_pages_cleans_stale_pages(spark, tmp_path, monkeypatch):
+    """Re-materializing after a page-size change must not leave stale
+    pages behind (they would be double-read by the scan), nor the
+    staging output of an interrupted run; a failed run must not leak
+    its persisted range partitioning."""
     ep = str(tmp_path / "ep")
     rest.materialize_pages(spark, SF, ep, page_size=100)
     n_small = len([p for p in os.listdir(ep) if p.startswith("page-")])
+    # an interrupted run: a write that fails after the range partitioning
+    # was persisted and counted must release it
+    persisted = _persistent_rdds(spark)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(rest.F, "to_json", boom)
+        try:
+            rest.materialize_pages(spark, SF, ep, page_size=1000)
+            raised = False
+        except RuntimeError as e:
+            raised = "injected failure" in str(e)
+    assert raised
+    assert _persistent_rdds(spark) == persisted
+    assert not os.path.exists(os.path.join(ep, "_done.json"))
+    # ... and leaves staging output and a half-written page behind
+    stale_part = os.path.join(ep, "_staging", "__page=99", "part-00000.txt")
+    os.makedirs(os.path.dirname(stale_part))
+    with open(stale_part, "w") as fh:
+        fh.write('{"items": []}\n')
+    open(os.path.join(ep, ".page-00099.json.tmp"), "w").close()
     rest.materialize_pages(spark, SF, ep, page_size=1000)
-    n_big = len([p for p in os.listdir(ep) if p.startswith("page-")])
+    assert _persistent_rdds(spark) == persisted
+    listing = sorted(os.listdir(ep))
+    assert "_staging" not in listing and ".page-00099.json.tmp" not in listing
+    n_big = len([p for p in listing if p.startswith("page-")])
     assert n_big < n_small
     # row count through the reader equals the source exactly
     rest.register(spark)
@@ -158,6 +188,59 @@ def test_materialize_pages_cleans_stale_pages(spark, tmp_path):
         .load()
     )
     assert df.count() == rest.io.seamless_items(spark, SF).count()
+
+
+def test_materialize_pages_endpoint_layout(spark, tmp_path, monkeypatch):
+    """The served layout the pushed TopN relies on: items sorted by
+    po_number within and across pages, pages.json row counts equal to
+    each page's item count, the pages' union equal to seamless_items,
+    and a null field (omitted from the page JSON) read back as null."""
+    real_items = rest.io.seamless_items
+    first_po = real_items(spark, SF).agg(F.min("po_number")).collect()[0][0]
+
+    def items_with_null(spark_, sf_dir):
+        df = real_items(spark_, sf_dir)
+        return df.withColumn(
+            "vendor",
+            F.when(F.col("po_number") == first_po, F.lit(None)).otherwise(
+                F.col("vendor")
+            ),
+        )
+
+    monkeypatch.setattr(rest.io, "seamless_items", items_with_null)
+    ep = str(tmp_path / "ep")
+    rest.materialize_pages(spark, SF, ep, page_size=100)
+    with open(os.path.join(ep, "pages.json")) as fh:
+        index = json.load(fh)
+    assert [p["file"] for p in index["pages"]] == sorted(
+        p for p in os.listdir(ep) if p.startswith("page-")
+    )
+    by_id = {c["column_id"]: c["printable_name"] for c in rest.ITEMS_CATALOG}
+    served = []
+    for page in index["pages"]:
+        with open(os.path.join(ep, page["file"])) as fh:
+            page_items = json.load(fh)["items"]
+        assert len(page_items) == page["rows"], page["file"]
+        served.extend(
+            {by_id[k]: v for k, v in item["application_data"].items()}
+            for item in page_items
+        )
+    assert sum(p["rows"] for p in index["pages"]) == index["n_rows"] == len(served)
+    pos = [r["po_number"] for r in served]
+    assert pos == sorted(pos) and len(set(pos)) == len(pos)
+    # the null vendor is omitted from the page, not written as a value
+    assert "vendor" not in served[0] and served[0]["po_number"] == first_po
+    cols = [c["printable_name"] for c in rest.ITEMS_CATALOG]
+    expected = sorted(
+        tuple(r[c] for c in cols)
+        for r in items_with_null(spark, SF).collect()
+    )
+    assert sorted(tuple(r.get(c) for c in cols) for r in served) == expected
+    # through the reader: same rows, the omitted field back as null
+    rest.register(spark)
+    read = spark.read.format("seamless_rest").option("endpoint", ep).load()
+    assert sorted(tuple(r[c] for c in cols) for r in read.collect()) == expected
+    assert read.filter(F.col("po_number") == first_po).collect()[0]["vendor"] is None
 
 
 def test_rest_topn_matches_spark_side_sort(spark):
